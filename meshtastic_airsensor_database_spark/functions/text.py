@@ -137,20 +137,6 @@ def polarity_score(n: Column, n_pos: Column, n_neg: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def sentiment_score(col: Column | str) -> Column:
-    """Lexicon sentiment in [-1, 1] over raw text — composition of
-    ``lexicon_hits`` + ``polarity_score`` (the same pieces
-    plans/textq.py::sentiment_by_source assembles over a materialized
-    token column, so the function and the registered query cannot
-    drift). Pure built-ins; stays in codegen at any corpus size."""
-    toks = tokens(col)
-    return polarity_score(
-        F.size(toks),
-        lexicon_hits(toks, SENTIMENT_POS),
-        lexicon_hits(toks, SENTIMENT_NEG),
-    )
-
-
 def quality_features(col: Column | str) -> dict[str, Column]:
     """Quality-scoring features: length, punctuation ratio, stopword ratio.
 

@@ -79,14 +79,6 @@ def quantize_int8(col: Column | str) -> Column:
     return F.when(maxabs > 0, q).otherwise(zeros)
 
 
-def int8_scale(col: Column | str) -> Column:
-    """The dequantization scale paired with ``quantize_int8`` (needed
-    only for magnitude-sensitive consumers — dot products, L2 — not
-    for cosine)."""
-    v = _as_double_array(col)
-    return F.array_max(F.transform(v, F.abs)) / F.lit(127.0)
-
-
 def cosine_similarity_arrow(a: Column | str, b: Column | str) -> Column:
     """Arrow/BLAS row-wise cosine — the bulk-verify twin of
     ``cosine_similarity`` for stages that score MILLIONS of candidate

@@ -102,10 +102,6 @@ def _ntz_to_ltz(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize a multi-consumed intermediate and truncate lineage.
 
@@ -264,6 +260,23 @@ def has_pending_append(path: str) -> bool:
     instead of silently absorbed by the probes' distinct semantics).
     Re-running the extend converges and clears the marker."""
     return os.path.exists(os.path.join(path, _APPEND_PENDING_MARKER))
+
+
+def warn_if_pending_append(path: str) -> None:
+    """Report a detected crashed-mid-publish extend (``has_pending_append``)
+    as a ``RuntimeWarning``: probes still answer correctly from the
+    safe-direction state, but the index is missing the tail of an
+    append until the extend is re-run."""
+    if has_pending_append(path):
+        import warnings
+
+        warnings.warn(
+            f"persisted index {path} has a pending append (a previous "
+            f"extend crashed mid-publish; {_APPEND_PENDING_MARKER} is "
+            "present): re-run the extend to complete it",
+            RuntimeWarning,
+            stacklevel=3,
+        )
 
 
 def parallel_append_ordered(path: str, writes: list) -> None:

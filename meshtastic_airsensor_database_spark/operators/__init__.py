@@ -8,7 +8,7 @@ Each module covers one SURVEY.md §2 family:
 - ``align``    — §2.3/§2.5: time-series alignment, gaps, latest, rolling
 - ``dedup``    — §2.11: exact / MinHash-LSH / SimHash / Jaccard / embedding
 - ``similarity`` — §2.11: brute-force + LSH/IVF top-k vector search
-- ``textops``  — §2.11: language ID, quality scoring, tokens, fingerprints
+- ``textops``  — §2.11: vocabulary encoding, shingle novelty/overlap cores
 - ``multimodal`` — §2.11: binary columns + decode/feature plumbing
 
 Persisted-index lifecycles (build once / extend append-only / probe by

@@ -67,6 +67,7 @@ from ..io_utils import (
     materialize,
     parallel_append_ordered,
     recover_staged_build,
+    warn_if_pending_append,
 )
 from .dedup import MAX_BUCKET
 
@@ -313,6 +314,7 @@ def probe_decon_index(
     eval-sized work, independent of probe count.
     """
     spark = evals.sparkSession
+    warn_if_pending_append(path)
     first = evals.select(emb_col).head()
     if first is None:
         # empty eval shard -> empty report with the right schema

@@ -23,7 +23,7 @@ docs) are capped by ``MAX_BUCKET`` salting guard.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_fingerprint_md5, word_shingles
@@ -129,35 +129,14 @@ def _perm_params(n_perm: int) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_signature(content_col: Column, n_perm: int = N_PERMUTATIONS) -> Column:
-    """array<long> MinHash signature over word-3-gram shingles.
-
-    One xxhash64 per shingle, then each 'permutation' is a universal
-    hash (a*x+b) mod P over that base hash; min over the shingle set
-    approximates the Jaccard-preserving permutation min. Pure
-    built-ins: transform + array_min.
-    """
-    shingles = word_shingles(content_col, 3)
-    base = F.transform(
-        shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MINHASH_P))
-    )
-    def perm(a: int, b: int):
-        return lambda x: (x * a + b) % _MINHASH_P
-
-    mins = [
-        F.array_min(F.transform(base, perm(a, b))) for a, b in _perm_params(n_perm)
-    ]
-    return F.array(*mins)
-
-
 def minhash_signature_df(
     df: DataFrame, id_col: str, content_col: str, n_perm: int = N_PERMUTATIONS
 ) -> DataFrame:
     """(id, sig array<long>) via explode + hash aggregate — the scale shape.
 
-    The column formulation (``minhash_signature``) gets its shingle
-    subexpression inlined once per permutation by Catalyst (no CSE
-    across array elements) — quadratic blowup. Exploding shingles and
+    A per-row column formulation (``array_min`` per permutation) gets
+    its shingle subexpression inlined once per permutation by Catalyst
+    (no CSE across array elements) — quadratic blowup. Exploding shingles and
     running ``n_perm`` MIN aggregates hashes each shingle exactly once
     and shuffles only (id, n_perm longs).
     """
@@ -612,57 +591,14 @@ SIMHASH_BITS = 64
 SIMHASH_BAND_BITS = 16
 
 
-def simhash(content_col: Column) -> Column:
-    """64-bit SimHash over whitespace tokens, pure built-ins.
-
-    Accumulate a 64-wide counter array over the token set
-    (aggregate + zip_with), +1 where the token hash has the bit set,
-    -1 otherwise; final signature takes the sign bits. Bit tests use
-    ``getbit`` (column-typed position); bit SETS use literal masks so
-    no column-typed shift is ever needed.
-    """
-    from ..functions.text import tokens
-
-    toks = F.array_distinct(tokens(content_col))
-    # hash each token ONCE up front: the per-bit lambda below would
-    # otherwise recompute xxhash64(token) for every one of the 64 bits
-    # (HOF lambdas re-evaluate captured expressions per element —
-    # functions/text.py::zipped_ngrams documents the trap)
-    tok_hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    bit_idx = F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1))
-    counters = F.aggregate(
-        tok_hashes,
-        F.array_repeat(F.lit(0), SIMHASH_BITS),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                bit_idx,
-                lambda i: F.when(F.getbit(h, i) == 1, 1).otherwise(-1),
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    # fold sign bits into one long: bit i set iff counter[i] > 0.
-    # Literal masks per bit (bit 63 is the long sign bit -> negative literal).
-    masks = [(1 << b) if b < 63 else -(1 << 63) for b in range(SIMHASH_BITS)]
-    bit_terms = [
-        F.when(F.element_at(counters, b + 1) > 0, F.lit(masks[b]).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for b in range(SIMHASH_BITS)
-    ]
-    return F.aggregate(
-        F.array(*bit_terms), F.lit(0).cast("long"), lambda acc, v: acc.bitwiseOR(v)
-    )
-
-
 def simhash_df(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
     """(id, simhash) via explode + hash aggregate — the scale shape.
 
-    The nested-lambda column formulation (``simhash``) builds a huge
-    expression tree that codegen executes per row; exploding tokens and
-    running 64 conditional SUMs through a hash aggregate is ~50x faster
-    and shuffles only (id, 64 ints). Empty/token-less docs get simhash 0.
+    A nested-lambda column formulation (a 64-wide counter array folded
+    per token) builds a huge expression tree that codegen executes per
+    row; exploding tokens and running 64 conditional SUMs through a
+    hash aggregate is ~50x faster and shuffles only (id, 64 ints).
+    Empty/token-less docs get simhash 0.
     """
     from ..functions.text import tokens
 

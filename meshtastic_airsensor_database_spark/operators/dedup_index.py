@@ -57,6 +57,7 @@ from ..io_utils import (
     materialize,
     parallel_append_ordered,
     recover_staged_build,
+    warn_if_pending_append,
 )
 from .dedup import (
     _MINHASH_P,
@@ -315,6 +316,7 @@ def dedup_new_batch(
     work, independent of shard count.
     """
     spark = new_docs.sparkSession
+    warn_if_pending_append(path)
     sketch = _check_meta(path)
     if new_docs.isEmpty():
         # empty shard -> empty report with the right schema (indexed_id

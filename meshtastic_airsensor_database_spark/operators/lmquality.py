@@ -65,26 +65,6 @@ def _doc_bigrams(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def train_bigram_lm(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> tuple[DataFrame, DataFrame]:
-    """Train the corpus bigram LM.
-
-    Returns ``(bigram_counts, context_counts)`` where ``bigram_counts``
-    is ``(w1, w2, c2)`` and ``context_counts`` is ``(w1, c1)`` with
-    ``c1 = Σ_w2 c2(w1, w2)`` (the standard conditional-MLE context
-    normalizer). Both are hash aggregations with map-side partials —
-    the shuffled rows are (word, count) partials, never documents, so
-    the LM "training" cost at 100 TB is one pass + one small exchange.
-    """
-    bg = _doc_bigrams(docs, text_col, id_col)
-    bigram_counts = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
-    context_counts = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    return bigram_counts, context_counts
-
-
 def perplexity_scores(
     docs: DataFrame,
     text_col: str = "text",

@@ -19,7 +19,6 @@ executors.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -52,18 +51,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("n_bytes", T.LongType()),
         T.StructField("feat_mean", T.DoubleType()),
         T.StructField("feat_histogram", T.ArrayType(T.LongType())),
-    ]
-)
-
-AUDIO_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("zero_crossing_rate", T.DoubleType()),
-        T.StructField("peak", T.IntegerType()),
     ]
 )
 
@@ -159,56 +146,6 @@ def extract_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
             yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
 
     return media.select("media_id", "content").mapInPandas(op, FEATURE_SCHEMA)
-
-
-def extract_audio_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
-    """Audio-specific features over WAV rows of the media table: RMS
-    level, zero-crossing rate (a crude pitch/noisiness proxy), peak
-    amplitude, duration. Non-WAV and malformed rows are dropped
-    (modality filter + drop-and-continue), mirroring how an audio
-    curation pass scores a mixed media corpus. Same Arrow-batched
-    ``mapInPandas`` shape as ``extract_features``; multi-channel audio
-    is analyzed on the channel-mean mono mixdown.
-    """
-    import numpy as np
-
-    from ..functions.codecs import decode_wav, sniff_format
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                data = bytes(content)
-                try:
-                    if sniff_format(data) != "wav":
-                        continue
-                    samples, rate = decode_wav(data)
-                except (CodecError, NotImplementedError):
-                    continue
-                mono = samples.astype(np.float64).mean(axis=1)
-                n = len(mono)
-                if n == 0 or rate <= 0:
-                    continue
-                signs = np.signbit(mono)
-                crossings = int(np.count_nonzero(signs[1:] != signs[:-1]))
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "sample_rate": int(rate),
-                        "n_samples": n,
-                        "duration_s": n / rate,
-                        "rms": float(np.sqrt(np.mean(mono**2))),
-                        "zero_crossing_rate": crossings / max(n - 1, 1),
-                        "peak": int(np.max(np.abs(samples))),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FEATURE_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "content").mapInPandas(op, AUDIO_FEATURE_SCHEMA)
 
 
 def resize_stub(content: bytes, width: int, height: int) -> bytes:
@@ -322,55 +259,6 @@ def frame_sample(media: DataFrame, every_n: int = 2, max_frames: int = 16) -> Da
             yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
 
     return media.select("media_id", "content").mapInPandas(op, FRAME_SCHEMA)
-
-
-def frame_sample_udtf(
-    media: DataFrame, every_n: int = 2, max_frames: int = 16
-) -> DataFrame:
-    """``frame_sample`` through Spark 4's native Python UDTF API
-    (user-defined TABLE function + LATERAL join) instead of
-    mapInPandas — the declarative form of the 1:N flat-map: Catalyst
-    sees a real generator relation (it can push limits/projections
-    around it, and the lateral join distributes like any generate),
-    while the demux logic stays row-local Python. Frame-for-frame
-    parity with the mapInPandas path is pinned in tests; the same
-    ``max_frames`` cap bounds the per-row output amplification."""
-    from pyspark.sql.functions import lit, udtf
-
-    spark = media.sparkSession
-    en, mf, fb = int(every_n), int(max_frames), FRAME_BYTES
-
-    @udtf(returnType=FRAME_SCHEMA)
-    class _FrameSampler:
-        def eval(self, media_id, content):  # noqa: ANN001 - UDTF contract
-            if content is None:
-                return  # malformed_row_skip semantics
-            blob = bytes(content)
-            n_frames = max(1, len(blob) // fb)
-            kept = 0
-            for i in range(0, n_frames, en):
-                if kept >= mf:
-                    break
-                yield media_id, i, blob[i * fb : (i + 1) * fb]
-                kept += 1
-
-    # Unique per-call registration names: a fixed view/function name
-    # would let two calls with different inputs or parameters clobber
-    # each other's registrations in one session (and leak the view).
-    tag = uuid.uuid4().hex
-    fn, view = f"_frame_sample_udtf_{tag}", f"_frame_src_{tag}"
-    spark.udtf.register(fn, _FrameSampler)
-    media.select("media_id", "content").createOrReplaceTempView(view)
-    out = spark.sql(
-        f"SELECT s.media_id, s.frame_idx, s.frame "
-        f"FROM {view} m, LATERAL {fn}(m.media_id, m.content) s"
-    )
-    # The resolved logical plan no longer needs either catalog entry;
-    # drop BOTH the temp view and the temp function so the per-call
-    # names do not accumulate in long-lived sessions.
-    spark.catalog.dropTempView(view)
-    spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {fn}")
-    return out
 
 
 # --- perceptual image hashing + multimodal near-dup ---------------------------

@@ -1,96 +1,14 @@
-"""Document-level text analysis operators (SURVEY.md §2.11 text_analysis).
+"""Corpus-level text operators (SURVEY.md §2.11 text_analysis).
 
-DataFrame-level wrappers around functions/text.py so pipelines can
-annotate a corpus in one pass: tokens, quality features, language ID,
-fingerprints. All column expressions — one narrow projection, no
-shuffle, trivially parallel at 100 TB.
+Vocabulary encoding (tokens -> ids) and the shingle-set cores behind
+corpus novelty and cross-source overlap, built on the column
+expressions in functions/text.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..functions.text import (
-    doc_fingerprint_md5,
-    doc_fingerprint_rolling,
-    lang_id_pred,
-    quality_features,
-    token_count,
-)
-
-
-def annotate_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass text annotation: token count, quality features,
-    predicted language, content fingerprints."""
-    feats = quality_features(F.col(text_col))
-    return (
-        df.withColumn("n_tokens", token_count(F.col(text_col)))
-        .withColumn("punct_ratio", F.round(feats["punct_ratio"], 4))
-        .withColumn("stopword_ratio", F.round(feats["stopword_ratio"], 4))
-        .withColumn("pred_lang", lang_id_pred(F.col(text_col)))
-        .withColumn("fingerprint", doc_fingerprint_md5(F.col(text_col)))
-        .withColumn("rolling_fingerprint", doc_fingerprint_rolling(F.col(text_col)))
-    )
-
-
-def chunk_doc_udtf(size: int, stride: int):
-    """Python UDTF (Spark 4) emitting overlapping token chunks per
-    document — the table-function API surface for row→many-rows
-    transforms. NOTE: this is the slow path (per-row Python); the
-    production chunker is the pure-built-in formulation in
-    plans/textq.py::rag_chunk_spans (sequence + posexplode + slice),
-    which this UDTF is parity-tested against. Use the UDTF form when
-    the chunking rule needs real Python (custom tokenizers, sentence
-    boundaries) that built-ins can't express."""
-    from pyspark.sql.functions import udtf
-
-    class _ChunkDoc:
-        def eval(self, text):
-            if text is None:
-                return
-            # str.split() == split on \s+ runs after trim — the same
-            # tokenization as the built-in chunker
-            toks = text.split()
-            n = len(toks)
-            for i, start in enumerate(range(0, n, stride)):
-                end = min(start + size, n)
-                yield (i, start, end, end - start, " ".join(toks[start:end]))
-
-    return udtf(
-        _ChunkDoc,
-        returnType=(
-            "chunk_idx: bigint, start_tok: bigint, "
-            "end_tok: bigint, n_chunk_tokens: bigint, chunk_text: string"
-        ),
-    )
-
-
-def chunk_documents_udtf(
-    df: DataFrame, size: int, stride: int, id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Lateral-join the chunking UDTF against a corpus (the lateral
-    correlation keeps the left row's id next to each emitted chunk;
-    ``.outer()`` marks the argument as a left-side lateral reference)."""
-    chunker = chunk_doc_udtf(size, stride)
-    return df.lateralJoin(chunker(F.col(text_col).outer())).select(
-        id_col, "chunk_idx", "start_tok", "end_tok", "n_chunk_tokens", "chunk_text"
-    )
-
-
-def quality_filter(
-    df: DataFrame,
-    min_tokens: int = 10,
-    max_punct_ratio: float = 0.1,
-    min_stopword_ratio: float = 0.05,
-) -> DataFrame:
-    """Training-data quality gate over an annotated corpus."""
-    return df.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("punct_ratio") < max_punct_ratio)
-        & (F.col("stopword_ratio") >= min_stopword_ratio)
-    )
 
 
 # --- vocabulary encoding (tokens -> ids) --------------------------------------

@@ -34,8 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.enrich import dim_upsert_latest_wins, node_dim_enrich, seed_node_dim
-from ..operators.parse import json_envelope_parse, route_packets
-from ..schemas import NODE_DIM_SCHEMA
+from ..operators.parse import RAW_COLUMN, route_packets
+from ..schemas import NODE_DIM_SCHEMA, PACKET_SCHEMA
 from ..sources.landing import packet_stream_source
 from ..sources.sinks import parquet_table_sink
 
@@ -317,7 +317,6 @@ def process_packet_batch(
     paying a full shuffle per micro-batch. Don't dedup twice.
     """
     spark = batch.sparkSession
-    from ..operators.parse import PACKET_SCHEMA, RAW_COLUMN
     from ..operators.quality import split_by_rules
 
     # One envelope parse feeds the DLQ split AND the fact routes — the
@@ -1005,7 +1004,11 @@ def _start_ingest_stream(
 
     stream: DataFrame = raw
     if dedup_within_watermark:
-        parsed = json_envelope_parse(raw).withColumn(
+        # Unfiltered parse: corrupt lines (null packet) must still reach
+        # foreachBatch, whose quarantine records them.
+        parsed = raw.withColumn(
+            "packet", F.from_json(F.col(RAW_COLUMN), PACKET_SCHEMA)
+        ).withColumn(
             "event_ts", F.timestamp_seconds(F.col("packet.timestamp"))
         # dedup subset must be top-level columns; surface the nested
         # composite key (per-sender ids: see process_packet_batch)

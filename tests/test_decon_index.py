@@ -311,6 +311,19 @@ def test_crashed_extend_retry_converges(spark, index_path):
     assert [(r.eval_id, r.train_id, r.cosine) for r in rows2] == [(201, 4, 1.0)]
 
 
+def test_probe_reports_pending_append(spark, index_path):
+    """A leftover ``_APPEND_PENDING`` marker (an extend that crashed
+    mid-publish) is reported by the probe as a RuntimeWarning."""
+    from meshtastic_airsensor_database_spark.io_utils import _APPEND_PENDING_MARKER
+
+    build_decon_index(_df(spark, TRAIN), index_path)
+    open(os.path.join(index_path, _APPEND_PENDING_MARKER), "w").close()
+    probe = _df(spark, [(201, [1.0, 0.0, 0.0, 0.0, 0.0, 0.0])])
+    with pytest.warns(RuntimeWarning, match="pending append"):
+        rows = probe_decon_index(probe, index_path).collect()
+    assert [(r.eval_id, r.train_id) for r in rows] == [(201, 1)]
+
+
 def test_int8_storage_tier(spark, index_path):
     """storage='int8' stores quantized vectors (8x smaller verify
     scans); cosine runs directly on the int arrays because the

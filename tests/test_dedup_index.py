@@ -339,7 +339,10 @@ def test_crashed_mid_publish_extend_is_detectable_then_converges(
     (``has_pending_append``) instead of only silently absorbed by the
     probes' distinct semantics (r11 verdict #7): the fsync'd
     ``_APPEND_PENDING`` marker brackets the renames, survives the
-    crash, and is cleared by the retried extend's complete publish."""
+    crash, is reported by the probe as a RuntimeWarning, and is
+    cleared by the retried extend's complete publish."""
+    import warnings
+
     import meshtastic_airsensor_database_spark.io_utils as iou
 
     build_minhash_index(_df(spark, CORPUS), index_path)
@@ -366,10 +369,14 @@ def test_crashed_mid_publish_extend_is_detectable_then_converges(
     # state is the safe direction (orphan sigs, no dangling bands)
     assert iou.has_pending_append(index_path)
     probe = _df(spark, [(701, "detectable pending append shard text")])
-    assert dedup_new_batch(probe, index_path).count() == 0
+    with pytest.warns(RuntimeWarning, match="pending append"):
+        assert dedup_new_batch(probe, index_path).count() == 0
 
     # the retried extend converges AND clears the marker
     extend_minhash_index(shard, index_path)
     assert not iou.has_pending_append(index_path)
-    rows = dedup_new_batch(probe, index_path).collect()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        rows = dedup_new_batch(probe, index_path).collect()
     assert [(r.new_id, r.indexed_id) for r in rows] == [(701, 601)]
+    assert not [w for w in caught if "pending append" in str(w.message)]

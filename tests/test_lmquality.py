@@ -11,7 +11,6 @@ from meshtastic_airsensor_database_spark.operators.lmquality import (
     dup_span_coverage,
     exact_span_dedup,
     perplexity_scores,
-    train_bigram_lm,
 )
 
 
@@ -20,15 +19,6 @@ def _docs(spark, rows):
 
 
 class TestBigramLM:
-    def test_counts_tiny_corpus(self, spark):
-        docs = _docs(spark, [(1, "a b a b"), (2, "a b c")])
-        bigrams, contexts = train_bigram_lm(docs)
-        bg = {(r.w1, r.w2): r.c2 for r in bigrams.collect()}
-        # doc1: (a,b) (b,a) (a,b); doc2: (a,b) (b,c)
-        assert bg == {("a", "b"): 3, ("b", "a"): 1, ("b", "c"): 1}
-        cx = {r.w1: r.c1 for r in contexts.collect()}
-        assert cx == {"a": 3, "b": 2}
-
     def test_perplexity_matches_hand_computation(self, spark):
         docs = _docs(spark, [(1, "a b a b"), (2, "a b c")])
         got = {r.id: r for r in perplexity_scores(docs, k=0.5).collect()}

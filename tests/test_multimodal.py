@@ -184,67 +184,6 @@ def test_frame_sample_is_one_to_many_and_capped(spark):
     assert [f.frame_idx for f in by_id[2]] == [0]  # single short frame
 
 
-def test_frame_sample_udtf_matches_mapinpandas(spark):
-    """The native-UDTF lateral-join formulation must yield EXACTLY the
-    mapInPandas path's frames (ids, indices, bytes), including the
-    malformed-row drop and the max_frames cap."""
-    from meshtastic_airsensor_database_spark.operators.multimodal import (
-        FRAME_BYTES,
-        frame_sample,
-        frame_sample_udtf,
-    )
-
-    df = spark.createDataFrame(
-        [(1, bytes(range(256)) * 10), (2, b"x" * FRAME_BYTES), (3, None)],
-        ["doc_id", "payload"],
-    )
-    media = df.selectExpr("doc_id as media_id", "payload as content")
-
-    def key(rows):
-        return sorted(
-            (r.media_id, r.frame_idx, bytes(r.frame)) for r in rows
-        )
-
-    a = key(frame_sample(media, every_n=2, max_frames=3).collect())
-    b = key(frame_sample_udtf(media, every_n=2, max_frames=3).collect())
-    assert a == b and len(a) == 4
-
-
-def test_frame_sample_udtf_calls_do_not_clobber_each_other(spark):
-    """r4-ADVICE fix: per-call unique view/function names — two UDTF
-    invocations with different inputs/parameters in one session must
-    each keep their own results (a fixed registration name let the
-    second call clobber the first's unresolved plan), and the temp
-    view must not linger in the catalog."""
-    from meshtastic_airsensor_database_spark.operators.multimodal import (
-        FRAME_BYTES,
-        frame_sample_udtf,
-    )
-
-    m1 = spark.createDataFrame(
-        [(1, bytes(range(256)) * 10)], ["media_id", "content"]
-    )
-    m2 = spark.createDataFrame(
-        [(2, b"y" * (FRAME_BYTES * 4))], ["media_id", "content"]
-    )
-    df1 = frame_sample_udtf(m1, every_n=2, max_frames=3)
-    df2 = frame_sample_udtf(m2, every_n=1, max_frames=2)  # different params
-    r1 = df1.collect()
-    r2 = df2.collect()
-    assert {r.media_id for r in r1} == {1} and len(r1) == 3
-    assert {r.media_id for r in r2} == {2} and len(r2) == 2
-    # both plans stay independently re-executable after the other ran
-    assert df1.count() == 3 and df2.count() == 2
-    leftover = [t.name for t in spark.catalog.listTables()
-                if t.name.startswith("_frame_src")]
-    assert leftover == []
-    # r5-ADVICE fix: the per-call FUNCTION registration must be dropped
-    # too, or long-lived sessions accumulate catalog entries unboundedly
-    leftover_fns = [f.name for f in spark.catalog.listFunctions()
-                    if f.name.startswith("_frame_sample_udtf")]
-    assert leftover_fns == []
-
-
 def test_resize_media_skips_null_meta_rows(spark):
     from meshtastic_airsensor_database_spark.operators.multimodal import (
         MEDIA_SCHEMA,
@@ -258,55 +197,6 @@ def test_resize_media_skips_null_meta_rows(spark):
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     out = {r.media_id for r in resize_media(media, 4, 4).collect()}
     assert out == {1}
-
-
-def test_audio_features_sine_wave_physics(spark):
-    """A pure 440 Hz sine at amplitude A must show RMS ~ A/sqrt(2),
-    ZCR ~ 2f/rate, peak ~ A; non-WAV and malformed rows drop."""
-    from meshtastic_airsensor_database_spark.operators.multimodal import (
-        extract_audio_features,
-    )
-
-    rate, freq, amp, secs = 8000, 440.0, 12000, 1.0
-    t = np.arange(int(rate * secs)) / rate
-    tone = (amp * np.sin(2 * np.pi * freq * t)).astype(np.int16)
-    rows = [
-        (1, bytearray(encode_wav(tone, rate))),
-        (2, b"not audio at all"),          # skipped: not WAV
-        (3, bytearray(b"RIFFxxxxWAVE")),   # skipped: malformed WAV
-        (4, None),                          # skipped: null payload
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    media = to_media_table(df, "media_id", "payload", "audio")
-    got = {r["media_id"]: r for r in extract_audio_features(media).collect()}
-
-    assert set(got) == {1}
-    r1 = got[1]
-    assert r1["sample_rate"] == rate
-    assert r1["n_samples"] == len(tone)
-    assert abs(r1["duration_s"] - secs) < 1e-9
-    assert abs(r1["rms"] - amp / np.sqrt(2)) / (amp / np.sqrt(2)) < 0.01
-    assert abs(r1["zero_crossing_rate"] - 2 * freq / rate) / (2 * freq / rate) < 0.02
-    assert abs(r1["peak"] - amp) <= amp * 0.001 + 1
-
-
-def test_audio_features_stereo_mixdown(spark):
-    """Stereo analysis runs on the channel-mean mixdown: L = -R cancels
-    to silence (rms ~ 0) while the peak still reports the raw extreme."""
-    from meshtastic_airsensor_database_spark.operators.multimodal import (
-        extract_audio_features,
-    )
-
-    t = np.arange(4000) / 8000.0
-    left = (10000 * np.sin(2 * np.pi * 100 * t)).astype(np.int16)
-    stereo = np.stack([left, (-left).astype(np.int16)], axis=1)
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_wav(stereo, 8000)))], "media_id long, payload binary"
-    )
-    media = to_media_table(df, "media_id", "payload", "audio")
-    r1 = extract_audio_features(media).first()
-    assert r1["rms"] < 1.0
-    assert r1["peak"] >= 9999
 
 
 def test_ahash_invariants_and_perturbation():

@@ -205,18 +205,16 @@ def test_quantize_int8_bounds_and_error(spark, sf_dir):
     zeros without dividing by zero."""
     from pyspark.sql import functions as F
 
-    from meshtastic_airsensor_database_spark.functions.vectors import (
-        int8_scale,
-        quantize_int8,
-    )
+    from meshtastic_airsensor_database_spark.functions.vectors import quantize_int8
     from meshtastic_airsensor_database_spark.io_utils import load
 
     emb = load(spark, sf_dir, "embeddings")
+    v = F.col("embedding").cast("array<double>")
     qdf = emb.select(
         "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
+        v.alias("v"),
         quantize_int8("embedding").alias("q"),
-        int8_scale("embedding").alias("s"),
+        (F.array_max(F.transform(v, F.abs)) / 127.0).alias("s"),
     )
     stats = qdf.select(
         F.array_max(F.transform("q", lambda x: F.abs(x))).alias("qmax"),

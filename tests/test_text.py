@@ -148,31 +148,6 @@ def test_pii_redaction_and_counts(spark):
     assert out[3].red == ""
 
 
-def test_udtf_chunker_matches_builtin_chunker(spark, sf_dir):
-    """The Python-UDTF chunker (the extensibility slow path) must emit
-    the exact row set of the pure-built-in rag_chunk_spans formulation
-    (the production path) — empty docs excluded, partial final chunks
-    kept, overlap preserved."""
-    from meshtastic_airsensor_database_spark.io_utils import load
-    from meshtastic_airsensor_database_spark.operators.textops import (
-        chunk_documents_udtf,
-    )
-    from meshtastic_airsensor_database_spark.plans.textq import (
-        CHUNK_SIZE,
-        CHUNK_STRIDE,
-        rag_chunk_spans,
-    )
-
-    want = {tuple(r) for r in rag_chunk_spans(spark, sf_dir).collect()}
-    docs = load(spark, sf_dir, "documents").filter(F.trim("text") != "")
-    got = {
-        tuple(r)
-        for r in chunk_documents_udtf(docs, CHUNK_SIZE, CHUNK_STRIDE).collect()
-    }
-    assert got == want
-    assert want  # non-degenerate corpus
-
-
 def test_normalize_text_merges_formatting_variants(spark):
     from meshtastic_airsensor_database_spark.functions.text import normalize_text
     from pyspark.sql import functions as F
@@ -278,12 +253,22 @@ def test_zipped_ngrams_equals_python_ngrams(spark):
 def test_sentiment_score_known_values(spark):
     from pyspark.sql import functions as F
 
-    from meshtastic_airsensor_database_spark.functions.text import sentiment_score
+    from meshtastic_airsensor_database_spark.functions.text import (
+        SENTIMENT_NEG,
+        SENTIMENT_POS,
+        lexicon_hits,
+        polarity_score,
+        tokens,
+    )
 
     rows = [("fast fast good",), ("slow bad big",), ("fast slow",),
             ("the table row",), ("",), ("Fast GOOD slow",)]
     df = spark.createDataFrame(rows, "text string")
-    got = [r.s for r in df.select(sentiment_score("text").alias("s")).collect()]
+    ts = tokens("text")
+    score = polarity_score(
+        F.size(ts), lexicon_hits(ts, SENTIMENT_POS), lexicon_hits(ts, SENTIMENT_NEG)
+    )
+    got = [r.s for r in df.select(score.alias("s")).collect()]
     assert got[0] == 1.0            # all positive
     assert got[1] == -1.0           # all negative
     assert got[2] == 0.0            # balanced
