@@ -2689,9 +2689,7 @@ def ann_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosine re-rank. Every stage is declarative, so the oracle
     unrolls the whole training loop in SQL — the hash match pins the
     k-means math itself (assignment argmin, per-dim means, probe
-    ranking), closing the r3 verdict's ``no_oracle`` gap. The
-    Spark-ML-KMeans production variant (kmeans_ivf_topk) stays
-    pytest-verified against brute force."""
+    ranking), closing the r3 verdict's ``no_oracle`` gap."""
     emb = load(spark, sf_dir, "embeddings")
     return lloyd_ivf_topk(
         emb, query_vec_id=QUERY_VEC_ID, k=TOP_K,
@@ -2962,10 +2960,9 @@ LIMIT {TOP_K}
 """
 
 
-# Derandomized-PQ parameters (oracle tier): 4 subspaces x 8 codes,
+# Derandomized-PQ parameters: 4 subspaces x 8 codes,
 # 2 deterministic Lloyd rounds per subspace, 20 ADC candidates into the
-# exact re-rank. The production tier (operators/pq.py: Spark-ML-trained
-# codebooks, 8x16, Arrow-batched encode/ADC) stays pytest-verified.
+# exact re-rank.
 PQD_M = 4
 PQD_K = 8
 PQD_ITERS = 2
@@ -2992,10 +2989,8 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (s, cluster, dim) — 2 lineage checkpoints total instead of 2 per
     subspace); encoding falls out of the final assignment; ADC attaches
     via (s, cluster)-keyed joins; only the {cand}-row candidate set
-    touches float vectors again. The production tier (operators/pq.py)
-    is the same pipeline with ML-trained codebooks and Arrow-batched
-    kernels; this query pins the PQ MATH (training, encoding, ADC,
-    re-rank order) cross-engine."""
+    touches float vectors again. The DuckDB twin pins the PQ MATH
+    (training, encoding, ADC, re-rank order) cross-engine."""
     emb = load(spark, sf_dir, "embeddings")
     dim = len(emb.select("embedding").first()[0])
     assert dim % PQD_M == 0, (dim, PQD_M)

@@ -306,25 +306,90 @@ def test_curate_cli_snapshot_mode_versions_the_corpus(spark, sf_dir, tmp_path):
     assert v1 == v2 and len(v1) == report["stages"][-1]["n_docs"]
 
 
+def _tool(name):
+    """Import a ``tools/`` script as a module."""
+    import importlib
+    import sys as _sys
+
+    tools = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", "tools"))
+    _sys.path.insert(0, tools)
+    try:
+        return importlib.import_module(name)
+    finally:
+        _sys.path.remove(tools)
+
+
+def _no_spark(*_a, **_k):
+    raise AssertionError("a Spark session was requested")
+
+
 def test_run_query_metrics_mode(spark, sf_dir, monkeypatch, capsys):
     """--metrics must execute and print per-operator runtime rows
     (the EXPLAIN ANALYZE twin), descending through AQE stage nodes."""
-    import sys as _sys
-
-    sys_path = os.path.join(os.path.dirname(__file__), "..", "tools")
-    _sys.path.insert(0, os.path.abspath(sys_path))
-    try:
-        import run_query as rq
-    finally:
-        _sys.path.pop(0)
-    monkeypatch.setattr(
-        _sys, "argv", ["run_query", "pricing_summary", sf_dir, "--metrics"]
-    )
+    rq = _tool("run_query")
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setattr("sys.argv", ["run_query", "pricing_summary", "--metrics"])
     assert rq.main() == 0
     out = capsys.readouterr().out
     assert "Scan parquet" in out
     assert "numOutputRows=" in out
     assert "AdaptiveSparkPlan" not in out  # descended through AQE roots
+
+
+def test_run_query_explain_mode(spark, sf_dir, monkeypatch, capsys):
+    """--explain prints the formatted physical plan of the query at
+    $SPARK_GRAFT_SF_DIR, and runs nothing."""
+    rq = _tool("run_query")
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setattr("sys.argv", ["run_query", "--explain", "pricing_summary"])
+    assert rq.main() == 0
+    out = capsys.readouterr().out
+    assert out.startswith("== Physical Plan ==")
+    assert "Scan parquet" in out and sf_dir in out
+    assert "(1)" in out  # formatted mode: numbered operator details
+
+
+def test_run_query_profile_mode(spark, sf_dir, monkeypatch, capsys):
+    """--profile prints one JSON line on stdout with builder/action wall
+    and job counts per query, and a human line per query on stderr."""
+    rq = _tool("run_query")
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setattr("sys.argv", ["run_query", "--profile", "pricing_summary"])
+    assert rq.main() == 0
+    captured = capsys.readouterr()
+    lines = captured.out.strip().splitlines()
+    assert len(lines) == 1
+    rec = json.loads(lines[0])
+    assert rec["sf_dir"] == sf_dir and isinstance(rec["cpus"], int)
+    prof = rec["queries"]["pricing_summary"]
+    assert set(prof) == {"build_s", "action_s", "build_jobs", "action_jobs"}
+    assert min(prof["build_s"], prof["action_s"]) >= 0
+    assert prof["action_jobs"] >= 1
+    assert "pricing_summary" in captured.err
+
+
+@pytest.mark.parametrize("mode", [[], ["--explain"], ["--metrics"], ["--profile"]])
+def test_run_query_unknown_name_exits_2_before_spark(monkeypatch, capsys, mode):
+    rq = _tool("run_query")
+    monkeypatch.setattr(
+        "meshtastic_airsensor_database_spark.session.get_spark", _no_spark
+    )
+    monkeypatch.setattr(
+        "sys.argv", ["run_query", *mode, "pricing_summary", "no_such_query"]
+    )
+    assert rq.main() == 2
+    assert "no_such_query" in capsys.readouterr().err
+
+
+def test_check_correctness_unknown_name_exits_2(sf_dir, monkeypatch, capsys):
+    """A run that would compare nothing must not report ALL OK."""
+    cc = _tool("check_correctness")
+    monkeypatch.setattr(cc, "get_spark", _no_spark)
+    monkeypatch.setattr("sys.argv", ["check_correctness", sf_dir, "no_such_query"])
+    assert cc.main() == 2
+    captured = capsys.readouterr()
+    assert "no_such_query" in captured.err
+    assert "ALL OK" not in captured.out
 
 
 def test_maintain_cli_compact_index(spark, tmp_path, capsys):

@@ -28,16 +28,11 @@ ALLOWED = {
         "public skew operator: two-phase collect_list for hot keys",
     "operators/clean.py::union_evolving":
         "public schema-drift union over the align_to_schema contract",
-    "operators/pq.py::pq_topk":
-        "operators/pq.py stays (tools/scale_smoke.py trains and encodes "
-        "with it); this is the ADC search over those codes",
     "operators/similarity.py::brute_force_topk":
         "exact top-k that tests use as the reference for every "
         "approximate search",
     "operators/similarity.py::hyperplane_neardup_pairs":
         "public sign-LSH embedding near-dup operator",
-    "operators/similarity.py::kmeans_ivf_topk":
-        "public IVF search with Spark ML trained centroids",
     "plans/vectorq.py::_dotfold":
         "left-fold dot product a test uses as the bit-exact reference "
         "for _matmul_fold/_matvec_fold",

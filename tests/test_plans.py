@@ -117,8 +117,8 @@ BNLJ_OK = {"embedding_topk_cosine", "embedding_batch_topk",
            # single aggregated row of packed centroids crossed into the
            # narrow assignment projection (assign_ivf_clusters)
            "semantic_dedup_pairs",
-           # single query-vector row crossed into the k'-candidate
-           # exact re-rank (operators/pq.py::pq_topk)
+           # single query-vector row crossed into the exact re-rank of
+           # the k' ADC candidates
            "ann_pq_topk",
            # single query-vector row crossed into the vector-ranking arm
            # of the RRF fusion

@@ -96,24 +96,6 @@ def test_hyperplane_neardup_pairs_recall_vs_exact(spark, sf_dir):
         assert len(got & exact) / len(exact) >= 0.7
 
 
-def test_kmeans_ivf_full_probe_equals_brute_force(spark, sf_dir):
-    """Probing ALL trained clusters recovers the exact brute-force
-    top-k (the pruning structure loses nothing when not pruning)."""
-    from meshtastic_airsensor_database_spark.operators.similarity import (
-        kmeans_ivf_topk,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    exact = [r.vec_id for r in brute_force_topk(emb, 0, k=10).collect()]
-    full = [
-        r.vec_id
-        for r in kmeans_ivf_topk(
-            emb, query_vec_id=0, k=10, n_centroids=8, n_probe=8
-        ).collect()
-    ]
-    assert full == exact
-
-
 def test_lloyd_ivf_full_probe_equals_brute_force(spark, sf_dir):
     """The deterministic Lloyd's-trained IVF (the oracle-backed
     ann_kmeans_ivf_topk path) also recovers the exact brute-force
@@ -348,50 +330,6 @@ def test_semantic_dedup_pairs_recall_and_parity(spark, sf_dir):
         for r in semantic_dedup_pairs(emb, threshold=0.4, vectorized=True).collect()
     }
     assert got_arrow == got
-
-
-def test_pq_codes_bounds_and_determinism(spark, sf_dir):
-    from meshtastic_airsensor_database_spark.operators.pq import (
-        PQ_K,
-        PQ_M,
-        pq_encode,
-        train_pq_codebooks,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    books = train_pq_codebooks(emb)
-    assert books.shape == (PQ_M, PQ_K, 64 // PQ_M)
-    books2 = train_pq_codebooks(emb)
-    assert (books == books2).all()  # deterministic training
-
-    codes = pq_encode(emb, books).collect()
-    assert len(codes) == emb.count()
-    for r in codes:
-        assert len(r.codes) == PQ_M
-        assert all(0 <= c < PQ_K for c in r.codes)
-    # encoding is deterministic too
-    again = {r.vec_id: list(r.codes) for r in pq_encode(emb, books).collect()}
-    assert {r.vec_id: list(r.codes) for r in codes} == again
-
-
-def test_pq_topk_recall_vs_brute_force(spark, sf_dir):
-    """ADC top-k with exact re-rank vs exact brute force: the re-rank
-    makes reported cosines exact, so every returned id appearing in
-    the brute-force top-10 must carry the identical cosine; recall@10
-    has a corpus floor (ADC is approximate — candidates can miss)."""
-    from meshtastic_airsensor_database_spark.operators.pq import pq_topk
-
-    emb = load(spark, sf_dir, "embeddings")
-    exact = {r.vec_id: r.cosine for r in brute_force_topk(emb, 0, k=10).collect()}
-    got = pq_topk(emb, query_vec_id=0, k=10).collect()
-    assert len(got) == 10
-    got_map = {r.vec_id: r.cosine for r in got}
-    overlap = set(got_map) & set(exact)
-    assert len(overlap) / len(exact) >= 0.5  # recall@10 floor
-    for vid in overlap:
-        assert got_map[vid] == exact[vid]  # re-ranked cosines are exact
-    dists = [r.adc_dist2 for r in got]
-    assert all(d >= 0 for d in dists)
 
 
 def test_standardize_vectors_zero_mean_unit_std(spark):

@@ -6,18 +6,21 @@ and an order-insensitive value hash (columns sorted by name, rows
 sorted, values stringified). Usage:
 
     python tools/check_correctness.py [sf_dir] [query ...]
+
+Unknown query names are listed and exit 2 before a Spark session starts.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from meshtastic_airsensor_database_spark.io_utils import table_path
 from meshtastic_airsensor_database_spark.schemas import TESTDATA_TABLES
@@ -53,13 +56,17 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qmap = entrymod.queries()
+    unknown = sorted(only - qmap.keys())
+    if unknown:
+        print(f"unknown queries {unknown}", file=sys.stderr)
+        return 2
 
     spark = get_spark("correctness_check")
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
 
-    qmap = entrymod.queries()
     omap = entrymod.oracle_sql()
     failures = 0
     for name, builder in qmap.items():

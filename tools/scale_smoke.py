@@ -287,7 +287,6 @@ def main() -> None:
     # knob), holding cluster size — and therefore per-cluster candidate
     # fan-out — constant as factor grows: total candidate pairs stay
     # linear in corpus size.
-    from meshtastic_airsensor_database_spark.operators.pq import pq_encode, train_pq_codebooks
     from meshtastic_airsensor_database_spark.operators.similarity import semantic_dedup_pairs
 
     timed(spark, "semantic_dedup_pairs",
@@ -362,7 +361,6 @@ def main() -> None:
         }
     finally:
         shutil.rmtree(idx, ignore_errors=True)
-    timed(spark, "pq_encode", pq_encode(emb, train_pq_codebooks(emb)), out)
     # r4 late additions over the factor-x corpus: corpus novelty (two
     # hash aggs over hashed grams), source-overlap (one collect_set
     # shuffle + narrow pair expansion bounded by the source domain),
